@@ -102,6 +102,7 @@ def main(argv: list[str] | None = None) -> None:
         "epochs_applied": report.epochs_applied,
         "epochs_skipped": report.epochs_skipped,
         "events_seen": report.events_seen,
+        "rows_committed": report.rows_committed,
         **({"realigns": report.realigns} if args.auto_realign else {}),
         **replay_metrics(table),
     }

@@ -18,10 +18,13 @@ from filipo_spark.table.icelet import IceletTable
 
 
 def replay_metrics(table: IceletTable) -> dict[str, Any]:
-    """Summarize commit lineage: epochs, rows, buckets, evolution events."""
+    """Summarize commit lineage: epochs, rows, buckets, data files written
+    per append, evolution events."""
     m = table.manifest()
     appends = [x for x in m if x.get("kind", "append") == "append"]
     compacts = [x for x in m if x.get("kind") == "compact"]
+    # appends committed before manifests recorded n_files are left out
+    written = [x["n_files"] for x in appends if "n_files" in x]
     snap = table.current_snapshot()
     bloom = {}
     if "bloom" in snap:
@@ -36,6 +39,8 @@ def replay_metrics(table: IceletTable) -> dict[str, Any]:
         "rows_written": sum(x["n_rows"] for x in m),
         "buckets_touched": sorted({b for x in m for b in x["buckets"]}),
         "data_files": sum(len(v) for v in snap["files"].values()),
+        "files_per_append": round(sum(written) / len(written), 2) if written else None,
+        "files_per_append_max": max(written, default=None),
         "evolution_events": sorted({e for x in m for e in x["evolution_events"]}),
         "offset_hi": max((x["offset_hi"] for x in appends if x["offset_hi"] is not None), default=None),
         "current_snapshot": snap["snapshot_id"],

@@ -8,5 +8,4 @@ from filipo_spark.operators.merge import (  # noqa: F401
     lww_resolve,
     merge_upserts,
     to_physical,
-    touched_buckets,
 )

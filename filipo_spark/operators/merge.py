@@ -20,11 +20,12 @@ reproduces byte-identical state.  Tombstones are garbage-collected by
 ``compact()`` once an event-time watermark passes (at 10^10 events you
 never keep them forever).
 
-Execution shape (scale): MERGE = unionByName(target_bucket, winners) →
-hash-aggregate max_by per key.  One shuffle on the key, with map-side
-partial aggregation (hot conversations reduce before the exchange);
-bucket pruning (``touched_buckets``) limits the rewrite to buckets that
-contain touched keys — copy-on-write per bucket, as Iceberg would.
+Execution shape (scale): MERGE = union(target rows, batch rows) →
+``max_by`` per key over ``(ts, _lsn)``, one exchange.  ``max_by``'s
+struct buffer is not HashAggregate-mutable, so Spark plans
+Sort→SortAggregate: a partial pass runs before the exchange when the
+fold is exchanged on the key, both passes after it when a table write
+exchanges on ``(_bucket, _salt)`` (sized by ``write_fanout``).
 """
 
 from __future__ import annotations
@@ -79,13 +80,31 @@ def merge_upserts(target_phys: DataFrame, winners: DataFrame) -> DataFrame:
     )
 
 
+def write_fanout(parallelism: int, n_buckets: int, salt_factor: int) -> tuple[int, int]:
+    """``(partitions, salt)`` of a bucket-aligned table write on a session
+    with ``parallelism`` task slots.
+
+    The salt splits a bucket across tasks only when the slots outnumber
+    the buckets, and never past the table's ``salt_factor``; the
+    partition count never exceeds the slots.  A write therefore makes at
+    most ``salt`` files per touched bucket — exactly one when
+    ``parallelism <= n_buckets`` — and a large cluster
+    (``parallelism >= n_buckets * salt_factor``) gets the full
+    ``n_buckets * salt_factor`` fan-out."""
+    salt = max(1, min(salt_factor, -(-parallelism // n_buckets)))
+    return min(n_buckets * salt, parallelism), salt
+
+
 def lww_resolve(
-    phys: DataFrame, n_buckets: int | None = None, salt_factor: int = 2
+    phys: DataFrame,
+    n_buckets: int | None = None,
+    salt_factor: int = 2,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Fold physical rows (possibly many versions per key) to the
-    winning version per key — the merge-on-read resolve step.  One hash
-    aggregate; associative, so any union of base and delta files
-    resolves correctly.
+    winning version per key — the merge-on-read resolve step.  One
+    exchange; the fold is associative, so any union of base and delta
+    files resolves correctly.
 
     With ``n_buckets`` set, the fold is *bucket-aligned*: rows are
     exchanged once on ``(_bucket, _salt)`` where ``_bucket =
@@ -93,20 +112,16 @@ def lww_resolve(
     Both are functions of the key, so the partitioning clusters keys;
     grouping includes them so Catalyst adds NO second exchange, and the
     output is ready for a partitionBy write — one payload shuffle per
-    epoch total, and exactly ``salt_factor`` files per touched bucket.
-    That alignment has a disclosed price: raw rows cross the exchange
-    (``max_by``'s struct buffer is not HashAggregate-mutable, so Spark
-    plans Sort→SortAggregate on the reduce side with both partial and
-    final passes post-shuffle — no map-side combine on THIS path; the
-    unbucketed branch above does get the usual partial/final split
-    around its exchange).  Skew is therefore absorbed by the salt, not
-    by combining: hashing only ~n_buckets distinct bucket values into
-    n_buckets partitions leaves ~1/e of them empty and others
-    double-loaded — straggler waves; key-hash salting makes the
-    n_buckets × salt_factor partitions uniform (the north_star's
-    "salted hash-partitioned key grouping").  ``salt_factor`` is table
-    metadata (fixed at create), so file layout is replay-deterministic
-    regardless of cluster size.
+    epoch total.  The partition count and salt come from
+    ``write_fanout`` over the session's ``defaultParallelism`` (the
+    table's ``salt_factor`` is only an upper bound), so a write makes at
+    most ``salt_factor`` files per touched bucket and exactly one on a
+    session with no more task slots than buckets.  ``partitions``
+    overrides the count and uses ``salt_factor`` as given (compaction's
+    one task per bucket).  On this branch raw rows cross the exchange:
+    the explicit repartition puts both SortAggregate passes after the
+    shuffle, so there is no map-side combine (the unbucketed branch
+    keeps its partial pass before the exchange).
 
     ``_kh`` (xxhash64 of the key) leads the grouping columns purely for
     sort economics: SortAggregate orders by the grouping columns as
@@ -137,15 +152,17 @@ def lww_resolve(
         return agg.select(
             *KEY_COLUMNS, *[F.col(f"_w.{c}").alias(c) for c in others]
         ).select(*PHYS_COLUMNS)
-    b = (
-        phys.withColumn("_bucket", bucket_of(F.col("conv_id"), n_buckets))
-        .withColumn(
-            "_salt", F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(salt_factor))
+    if partitions is None:
+        partitions, salt_factor = write_fanout(
+            phys.sparkSession.sparkContext.defaultParallelism, n_buckets, salt_factor
         )
-        .withColumn("_kh", F.xxhash64("conv_id", "turn_idx"))
+    b = (
+        phys.withColumn("_kh", F.xxhash64(*KEY_COLUMNS))
+        .withColumn("_bucket", bucket_of(F.col("conv_id"), n_buckets))
+        .withColumn("_salt", F.pmod("_kh", F.lit(salt_factor)))
     )
     agg = (
-        b.repartition(n_buckets * salt_factor, "_bucket", "_salt")
+        b.repartition(partitions, "_bucket", "_salt")
         .groupBy("_kh", "_bucket", "_salt", *KEY_COLUMNS)
         .agg(F.max_by(F.struct(*others), _order_struct()).alias("_w"))
     )
@@ -164,7 +181,7 @@ def changes_to_physical(changes: DataFrame) -> DataFrame:
 
 
 def apply_batch(target_phys: DataFrame, changes: DataFrame) -> DataFrame:
-    """Full micro-batch apply: LWW dedup + MERGE fused into ONE hash
+    """Full micro-batch apply: LWW dedup + MERGE fused into ONE
     aggregation over union(target, batch).
 
     Because LWW is an associative/commutative max over (ts, _lsn),
@@ -186,12 +203,6 @@ def compact(target_phys: DataFrame, watermark_ts) -> DataFrame:
     return target_phys.where(
         (~F.col("_deleted")) | (F.col("ts") >= F.lit(watermark_ts))
     )
-
-
-def touched_buckets(winners: DataFrame, n_buckets: int = N_BUCKETS_DEFAULT) -> list[int]:
-    """Partition-pruning set: buckets containing at least one touched key."""
-    rows = winners.select(bucket_of(F.col("conv_id"), n_buckets).alias("b")).distinct().collect()
-    return sorted(r["b"] for r in rows)
 
 
 def canonical(df: DataFrame) -> DataFrame:

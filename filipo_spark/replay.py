@@ -37,10 +37,18 @@ from filipo_spark.table.icelet import CommitResult, IceletTable
 class ReplayReport:
     epochs_applied: int = 0
     epochs_skipped: int = 0
-    events_seen: int = 0
+    # source events in the planned LSN extent; None when the extent was
+    # never scanned (explicit epoch ranges without ``bounds``)
+    events_seen: int | None = None
     commits: list[CommitResult] = field(default_factory=list)
     realigns: list[dict] = field(default_factory=list)
     mapping: object = None  # final Mapping of a drifted replay
+
+    @property
+    def rows_committed(self) -> int:
+        """Physical rows this replay's commits wrote (the manifest's
+        ``n_rows``): per-epoch winners, so at most the events applied."""
+        return sum(c.n_rows for c in self.commits)
 
 
 def plan_epochs(lsn_min: int, lsn_max: int, batch_size: int) -> list[tuple[int, int]]:
@@ -167,14 +175,14 @@ def run_drifted_replay(
         # LSN-range planning needs the log extent; explicit Kafka-style
         # ranges do NOT — the planning aggregation is a full source
         # scan, so it is skipped whenever the caller already fixed the
-        # ranges (events_seen then stays 0 unless bounds are passed;
-        # per-epoch counts live in the commit manifest either way)
+        # ranges (events_seen is then unknown unless bounds are passed;
+        # rows_committed and the manifest's n_rows still count the work)
         row = drifted.agg(
             F.min("lsn").alias("lo"), F.max("lsn").alias("hi"), F.count("*").alias("n")
         ).collect()[0]
         bounds = (row["lo"], row["hi"], row["n"])
     report = ReplayReport(
-        events_seen=(bounds[2] or 0) if bounds is not None else 0, mapping=mapping
+        events_seen=(bounds[2] or 0) if bounds is not None else None, mapping=mapping
     )
     if bounds is not None and not bounds[2]:
         return report

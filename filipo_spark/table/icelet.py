@@ -29,9 +29,10 @@ Layout & semantics
   file entries for touched buckets only and inherits the parent's for
   the rest — the same O(touched) metadata shape as an Iceberg manifest.
 * **Commit manifest**: one JSONL row per commit —
-  ``(epoch, offset_lo, offset_hi, snapshot_id, buckets, n_rows,
+  ``(epoch, offset_lo, offset_hi, snapshot_id, buckets, n_rows, n_files,
   evolution_events, kind)`` — per-partition lineage from source offset
-  range to snapshot id.
+  range to snapshot id; ``n_files`` counts the data files the commit
+  added.
 * **Exactly-once**: the manifest is the fence.  A batch whose
   ``(offset_lo, offset_hi]`` already appears is skipped (idempotent
   replay); a crash between data write and pointer swap leaves orphan
@@ -46,7 +47,7 @@ Layout & semantics
 
 Scale: metadata ops are O(buckets) driver-side JSON; reads pass explicit
 file lists to ``spark.read.parquet`` (no directory listing, exact
-pruning); the resolve fold is one hash aggregate with map-side combine.
+pruning); the resolve fold is one exchange and a sort aggregate per key.
 """
 
 from __future__ import annotations
@@ -67,6 +68,7 @@ from filipo_spark.operators.merge import (
     changes_to_physical,
     lww_resolve,
     to_physical,
+    write_fanout,
 )
 from filipo_spark.schema import KEY_COLUMNS, N_BUCKETS_DEFAULT
 
@@ -83,6 +85,7 @@ class CommitResult:
     skipped: bool
     buckets: list[int] = field(default_factory=list)
     n_rows: int = 0
+    n_files: int = 0
 
 
 class IceletTable:
@@ -374,9 +377,10 @@ class IceletTable:
             return CommitResult(epoch=epoch, snapshot_id=None, skipped=True)
         if self.mode == "mor":
             # O(batch) write: batch-local winners become delta files.
-            # Bucket-aligned resolve → ONE payload shuffle, output ready
-            # for partitionBy write.  Touched buckets are discovered from
-            # the staging output dirs (no extra pre-scan of the batch).
+            # Bucket-aligned resolve → ONE payload shuffle sized to the
+            # session's task slots, output ready for partitionBy write.
+            # Touched buckets are discovered from the staging output dirs
+            # (no extra pre-scan of the batch).
             out = lww_resolve(changes_to_physical(changes), n_buckets=self.n_buckets,
                               salt_factor=self.salt_factor)
             touched = None
@@ -394,7 +398,8 @@ class IceletTable:
                 sid = self.current_snapshot_id()
                 self._append_manifest(
                     {"epoch": epoch, "offset_lo": offset_lo, "offset_hi": offset_hi,
-                     "snapshot_id": sid, "buckets": [], "n_rows": 0, "kind": "append",
+                     "snapshot_id": sid, "buckets": [], "n_rows": 0, "n_files": 0,
+                     "kind": "append",
                      "evolution_events": evolution_events or []}
                 )
                 return CommitResult(epoch=epoch, snapshot_id=sid, skipped=False)
@@ -429,11 +434,12 @@ class IceletTable:
         ]
         if not cands:
             return None
-        # salt_factor=1: compaction's contract is one folded file per
-        # bucket (parallelism = bucket count, fine for maintenance)
+        # one folded file per bucket from one task per bucket: sized to
+        # the slots instead, the few large tasks of a full compaction run
+        # unevenly loaded and measured slower
         resolved = lww_resolve(
             self.read_raw(spark, buckets=cands), n_buckets=self.n_buckets,
-            salt_factor=1,
+            salt_factor=1, partitions=self.n_buckets,
         )
         return self._commit(
             resolved, epoch, offset_lo=None, offset_hi=None, touched=sorted(cands),
@@ -457,27 +463,24 @@ class IceletTable:
         staging = os.path.join(self._data, f".staging-{sid}")
         obs = Observation(f"commit-{sid}")
         # one Spark job: bucket-partitioned input → sort within → one file
-        # per bucket dir.  Deterministic row order inside each file (stable
-        # output contract); at 100 TB raise the partition factor to allow
-        # N files/bucket.  If the caller pre-bucketed (lww_resolve with
-        # n_buckets), no exchange happens here at all.
+        # per bucket dir per task holding it.  Deterministic row order
+        # inside each file (stable output contract).  If the caller
+        # pre-bucketed (lww_resolve with n_buckets), no exchange happens
+        # here at all.
         if "_bucket" not in out_phys.columns:
-            # key-hash shard alongside the bucket (same shape as the
-            # bucket-aligned resolve): hashing only n_buckets distinct
-            # bucket values into n_buckets partitions leaves ~1/e of
-            # them empty and others double-loaded (straggler waves on a
-            # bootstrap-sized write); the shard makes the partitions
-            # uniform and is dropped before the write, so the file
-            # schema is unchanged (salt_factor files per bucket, exactly
-            # like an epoch commit).
+            # the bootstrap: same fan-out as an epoch's bucket-aligned
+            # resolve (write_fanout), with the key-hash shard dropped
+            # before the write so the file schema is unchanged
+            parts, salt = write_fanout(
+                out_phys.sparkSession.sparkContext.defaultParallelism,
+                self.n_buckets, self.salt_factor,
+            )
             out_phys = (
                 out_phys.withColumn(
                     "_bucket", bucket_of(F.col("conv_id"), self.n_buckets)
                 )
-                .withColumn(
-                    "_ws", F.pmod(F.xxhash64(*KEY_COLUMNS), F.lit(self.salt_factor))
-                )
-                .repartition(self.n_buckets * self.salt_factor, "_bucket", "_ws")
+                .withColumn("_ws", F.pmod(F.xxhash64(*KEY_COLUMNS), F.lit(salt)))
+                .repartition(parts, "_bucket", "_ws")
                 .drop("_ws")
             )
         (
@@ -505,7 +508,8 @@ class IceletTable:
                 sid0 = self.current_snapshot_id()
                 self._append_manifest(
                     {"epoch": epoch, "offset_lo": offset_lo, "offset_hi": offset_hi,
-                     "snapshot_id": sid0, "buckets": [], "n_rows": 0, "kind": kind,
+                     "snapshot_id": sid0, "buckets": [], "n_rows": 0, "n_files": 0,
+                     "kind": kind,
                      "evolution_events": evolution_events}
                 )
                 return CommitResult(epoch=epoch, snapshot_id=sid0, skipped=False)
@@ -549,6 +553,7 @@ class IceletTable:
             bloom.save(os.path.join(self.root, rel))
             bloom_meta = {"file": rel, "bits": self.bloom_bits, "k": self.bloom_k}
         files: dict[str, list[str]] = dict(parent["files"])
+        n_files = 0
         for b in touched:
             src = os.path.join(staging, f"_bucket={b}")
             rel_dir = os.path.join("data", f"b={b}", f"snap-{sid}")
@@ -562,6 +567,7 @@ class IceletTable:
                     for fn in os.listdir(dst)
                     if fn.endswith(".parquet")
                 )
+            n_files += len(bucket_files)
             if replace:
                 files[str(b)] = bucket_files
             else:
@@ -617,10 +623,11 @@ class IceletTable:
         self._append_manifest(
             {"epoch": epoch, "offset_lo": offset_lo, "offset_hi": offset_hi,
              "snapshot_id": sid, "buckets": touched, "n_rows": n_rows,
-             "kind": kind, "evolution_events": evolution_events}
+             "n_files": n_files, "kind": kind, "evolution_events": evolution_events}
         )
         return CommitResult(
-            epoch=epoch, snapshot_id=sid, skipped=False, buckets=touched, n_rows=n_rows
+            epoch=epoch, snapshot_id=sid, skipped=False, buckets=touched,
+            n_rows=n_rows, n_files=n_files,
         )
 
     # --- maintenance ---------------------------------------------------

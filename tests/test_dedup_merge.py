@@ -11,7 +11,13 @@ import datetime as dt
 
 from filipo_spark.generators import gen_changelog, gen_transcripts
 from filipo_spark.operators.dedup import lww_dedup, lww_dedup_salted
-from filipo_spark.operators.merge import apply_batch, canonical, logical, to_physical
+from filipo_spark.operators.merge import (
+    apply_batch,
+    canonical,
+    logical,
+    to_physical,
+    write_fanout,
+)
 
 from tests.conftest import df_rows
 
@@ -150,3 +156,18 @@ def test_delete_then_reinsert_and_tombstone(spark):
     phys_m = spark.createDataFrame(phys.collect(), phys.schema)
     after = apply_batch(phys_m, late)
     assert df_rows(canonical(logical(after))) == out
+
+
+def test_write_fanout_sizes_to_task_slots():
+    """(parallelism, n_buckets, salt_factor) → (partitions, salt): never
+    more partitions than slots, a salt only when slots outnumber buckets
+    and never above the table's salt_factor."""
+    cases = {
+        (1, 4, 1): (1, 1), (1, 4, 2): (1, 1), (1, 16, 1): (1, 1), (1, 16, 2): (1, 1),
+        (3, 4, 1): (3, 1), (3, 4, 2): (3, 1), (3, 16, 1): (3, 1), (3, 16, 2): (3, 1),
+        (64, 4, 1): (4, 1), (64, 4, 2): (8, 2), (64, 16, 1): (16, 1), (64, 16, 2): (32, 2),
+        # between the regimes: salted, but capped at the slots
+        (6, 4, 2): (6, 2), (20, 16, 2): (20, 2), (16, 16, 2): (16, 1),
+    }
+    for args, want in cases.items():
+        assert write_fanout(*args) == want, args

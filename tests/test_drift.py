@@ -419,3 +419,20 @@ def test_empty_source_with_explicit_ranges_is_not_fenced(spark, base, tmp_path):
     )
     assert late.epochs_applied == 1
     assert df_rows(table.read_logical(spark)) == df_rows(target)
+
+
+def test_explicit_epochs_report_rows_committed(spark, base, tmp_path):
+    """Explicit epoch ranges without ``bounds`` never scan the source
+    extent: the report says the event count is unknown (not 0) and
+    counts the rows its commits wrote, exactly the manifest's n_rows."""
+    target, mapping = base
+    table = IceletTable.create(str(tmp_path / "tbl"), n_buckets=8)
+    table.bootstrap(target)
+    echo = gen_drifted(gen_echo_changelog(target, start_lsn=BASE), "rename")
+    report = run_drifted_replay(
+        spark, table, echo, epochs=[(BASE - 1, BASE + SPAN - 1)], mapping=mapping
+    )
+    assert report.epochs_applied == 1 and report.realigns == []
+    assert report.events_seen is None
+    appends = [m for m in table.manifest() if m["kind"] == "append"]
+    assert report.rows_committed == sum(m["n_rows"] for m in appends) == target.count()

@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from filipo_spark.generators import gen_changelog, gen_transcripts
+from filipo_spark.metrics import replay_metrics
 from filipo_spark.operators.merge import apply_batch, canonical, logical, to_physical
 from filipo_spark.replay import run_replay
 from filipo_spark.table.icelet import IceletTable
@@ -216,3 +219,62 @@ def test_first_append_into_empty_is_delta_free(spark, tmp_path, log):
     run_replay(spark, t, log, batch_size=10**9)  # one epoch from empty
     assert t.current_snapshot()["delta_free"] is True
     assert df_rows(canonical(t.read_logical(spark))) == expected_state(spark, log)
+
+
+def _added_files(t, sid):
+    """Data files snapshot ``sid`` references that its parent does not."""
+    with open(t._snap_path(sid)) as f:
+        snap = json.load(f)
+    old = set()
+    if snap["parent"]:
+        with open(t._snap_path(snap["parent"])) as f:
+            old = {x for fl in json.load(f)["files"].values() for x in fl}
+    return {b: [x for x in fl if x not in old] for b, fl in snap["files"].items()}
+
+
+def test_mor_epoch_writes_one_file_per_touched_bucket(spark, tmp_path, log):
+    """On a session with no more task slots than buckets, a merge-on-read
+    epoch writes exactly one parquet file into each bucket it touches,
+    and the table resolves to apply_batch's fold."""
+    n = max(16, spark.sparkContext.defaultParallelism)
+    target = gen_transcripts(spark, n_conv=20, max_turns=10, seed=5)
+    t = IceletTable.create(str(tmp_path / "t"), n_buckets=n)
+    t.bootstrap(target)
+    res = t.apply_epoch(spark, log, epoch=0, offset_lo=-1, offset_hi=10**9)
+    assert len(res.buckets) > 1
+    added = _added_files(t, res.snapshot_id)
+    for b in res.buckets:
+        assert len(added[str(b)]) == 1, (b, added[str(b)])
+        snap_dir = tmp_path / "t" / "data" / f"b={b}" / f"snap-{res.snapshot_id}"
+        assert len(list(snap_dir.glob("*.parquet"))) == 1
+    assert res.n_files == len(res.buckets)
+    want = df_rows(canonical(logical(apply_batch(to_physical(target), log))))
+    assert df_rows(canonical(t.read_logical(spark))) == want
+
+
+def test_manifest_n_files_is_snapshot_minus_parent(spark, tmp_path, log):
+    """Every commit's manifest row records the data files it added —
+    bootstrap, MoR appends, compaction, COW appends and an empty epoch —
+    and replay_metrics reports files written per append."""
+    from filipo_spark.schema import CHANGE_SCHEMA
+
+    mor = IceletTable.create(str(tmp_path / "mor"), n_buckets=4)
+    mor.bootstrap(gen_transcripts(spark, n_conv=8, max_turns=6, seed=3))
+    run_replay(spark, mor, log, batch_size=600)
+    mor.compact(spark, min_files=2)
+    mor.apply_epoch(spark, spark.createDataFrame([], CHANGE_SCHEMA), 99, 10**9, 10**9 + 1)
+    cow = IceletTable.create(str(tmp_path / "cow"), n_buckets=4, mode="cow")
+    run_replay(spark, cow, log, batch_size=600)
+    for t in (mor, cow):
+        rows = t.manifest()
+        assert all("n_files" in m for m in rows)
+        sids = [m["snapshot_id"] for m in rows]
+        for i, m in enumerate(rows):
+            # an empty epoch re-fences the current snapshot: no new files
+            new_snap = sids.index(m["snapshot_id"]) == i
+            want = sum(map(len, _added_files(t, m["snapshot_id"]).values())) if new_snap else 0
+            assert m["n_files"] == want, m
+        appends = [m["n_files"] for m in rows if m["kind"] == "append"]
+        met = replay_metrics(t)
+        assert met["files_per_append"] == round(sum(appends) / len(appends), 2)
+        assert met["files_per_append_max"] == max(appends) > 0
