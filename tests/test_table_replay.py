@@ -10,6 +10,7 @@ from filipo_spark.generators import gen_changelog, gen_transcripts
 from filipo_spark.metrics import replay_metrics
 from filipo_spark.operators.merge import apply_batch, canonical, logical, to_physical
 from filipo_spark.replay import run_replay
+from filipo_spark.schema import CHANGE_SCHEMA
 from filipo_spark.table.icelet import IceletTable
 
 from tests.conftest import df_rows
@@ -256,8 +257,6 @@ def test_manifest_n_files_is_snapshot_minus_parent(spark, tmp_path, log):
     """Every commit's manifest row records the data files it added —
     bootstrap, MoR appends, compaction, COW appends and an empty epoch —
     and replay_metrics reports files written per append."""
-    from filipo_spark.schema import CHANGE_SCHEMA
-
     mor = IceletTable.create(str(tmp_path / "mor"), n_buckets=4)
     mor.bootstrap(gen_transcripts(spark, n_conv=8, max_turns=6, seed=3))
     run_replay(spark, mor, log, batch_size=600)
