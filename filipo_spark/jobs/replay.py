@@ -24,7 +24,6 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--table", required=True, help="Icelet table root (created if absent)")
     ap.add_argument("--batch-size", type=int, default=1_000_000)
     ap.add_argument("--n-buckets", type=int, default=32)
-    ap.add_argument("--mode", choices=["mor", "cow"], default="mor")
     ap.add_argument("--bootstrap", help="optional parquet of initial logical target rows")
     ap.add_argument("--mapping", help="optional mapping.json to re-type a drifted source")
     ap.add_argument("--auto-realign", action="store_true",
@@ -59,7 +58,7 @@ def main(argv: list[str] | None = None) -> None:
     if os.path.exists(os.path.join(args.table, "metadata", "CURRENT")):
         table = IceletTable.load(args.table)
     else:
-        table = IceletTable.create(args.table, n_buckets=args.n_buckets, mode=args.mode)
+        table = IceletTable.create(args.table, n_buckets=args.n_buckets)
         if args.bootstrap:
             table.bootstrap(spark.read.parquet(args.bootstrap))
 

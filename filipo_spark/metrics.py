@@ -3,15 +3,12 @@
 The reference averages per-candidate response times into its function
 store (AlignmentProcessor.java:1138-1146 → OutputManager.java:81-82);
 the engine's equivalents are (a) ``Observation`` counters already wired
-into every commit (rows_written in the manifest), (b) this module's
-manifest summarization, and (c) a ``StreamingQueryListener`` for the
-streaming tail (micro-batch rates straight from Spark's progress
-events — no extra actions on the data path).
+into every commit (rows_written in the manifest) and (b) this module's
+manifest summarization.
 """
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 from filipo_spark.table.icelet import IceletTable
@@ -45,39 +42,3 @@ def replay_metrics(table: IceletTable) -> dict[str, Any]:
         "offset_hi": max((x["offset_hi"] for x in appends if x["offset_hi"] is not None), default=None),
         "current_snapshot": snap["snapshot_id"],
     }
-
-
-class TailMetricsListener:
-    """StreamingQueryListener capturing per-micro-batch rates.
-
-    Import-guarded: constructed lazily so batch-only runs never touch the
-    streaming classes."""
-
-    def __new__(cls):
-        from pyspark.sql.streaming import StreamingQueryListener
-
-        class _L(StreamingQueryListener):
-            def __init__(self):
-                self.progress: list[dict[str, Any]] = []
-
-            def onQueryStarted(self, event):
-                pass
-
-            def onQueryProgress(self, event):
-                p = json.loads(event.progress.json)
-                self.progress.append(
-                    {
-                        "batchId": p.get("batchId"),
-                        "numInputRows": p.get("numInputRows"),
-                        "inputRowsPerSecond": p.get("inputRowsPerSecond"),
-                        "durationMs": p.get("durationMs", {}),
-                    }
-                )
-
-            def onQueryIdle(self, event):
-                pass
-
-            def onQueryTerminated(self, event):
-                pass
-
-        return _L()

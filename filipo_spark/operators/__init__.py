@@ -3,9 +3,7 @@ from filipo_spark.operators.merge import (  # noqa: F401
     apply_batch,
     canonical,
     changes_to_physical,
-    compact,
     logical,
     lww_resolve,
-    merge_upserts,
     to_physical,
 )

@@ -16,9 +16,8 @@ physical row retains the LWW ordinal of the event that produced it:
 Deletes are retained as tombstones.  MERGE is then a *fold of an
 associative, commutative max* over (ts, _lsn) per key — order- and
 batching-insensitive by construction, so replay from any checkpoint
-reproduces byte-identical state.  Tombstones are garbage-collected by
-``compact()`` once an event-time watermark passes (at 10^10 events you
-never keep them forever).
+reproduces byte-identical state.  Tombstones are kept: no watermark GC
+drops them yet (an open ROADMAP.md item).
 
 Execution shape (scale): MERGE = union(target rows, batch rows) →
 ``max_by`` per key over ``(ts, _lsn)``, one exchange.  ``max_by``'s
@@ -33,7 +32,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from filipo_spark.operators.dedup import lww_dedup
 from filipo_spark.schema import KEY_COLUMNS, N_BUCKETS_DEFAULT, TARGET_COLUMNS
 
 PHYS_META = ["_lsn", "_deleted"]
@@ -62,22 +60,6 @@ def to_physical(target: DataFrame) -> DataFrame:
 def logical(physical: DataFrame) -> DataFrame:
     """User-facing view: live rows only, logical schema."""
     return physical.where(~F.col("_deleted")).select(*TARGET_COLUMNS)
-
-
-def winners_to_physical(winners: DataFrame) -> DataFrame:
-    return winners.select(
-        *TARGET_COLUMNS,
-        F.col("lsn").alias("_lsn"),
-        (F.col("op") == "D").alias("_deleted"),
-    )
-
-
-def merge_upserts(target_phys: DataFrame, winners: DataFrame) -> DataFrame:
-    """Apply already-deduped winners (one row/key, with op+lsn) to the
-    physical target; returns the new physical state."""
-    return lww_resolve(
-        target_phys.select(*PHYS_COLUMNS).unionByName(winners_to_physical(winners))
-    )
 
 
 def write_fanout(parallelism: int, n_buckets: int, salt_factor: int) -> tuple[int, int]:
@@ -188,20 +170,11 @@ def apply_batch(target_phys: DataFrame, changes: DataFrame) -> DataFrame:
     dedup-then-merge and merge-directly are the same fold; fusing them
     halves the shuffles on the hot path (one exchange on the key, with
     map-side partial aggregation absorbing hot-conversation skew).
-    Shared by the batch replay loop (replay.py) and the Structured
-    Streaming ``foreachBatch`` sink (streaming/tail.py) so both paths
-    have identical semantics."""
+    The in-memory form of what ``IceletTable.apply_epoch`` commits —
+    the fold the tests and the batched-replay query check tables
+    against."""
     return lww_resolve(
         target_phys.select(*PHYS_COLUMNS).unionByName(changes_to_physical(changes))
-    )
-
-
-def compact(target_phys: DataFrame, watermark_ts) -> DataFrame:
-    """Drop tombstones whose event time is older than the watermark —
-    safe once the source guarantees no event below the watermark will
-    arrive (Structured Streaming withWatermark contract)."""
-    return target_phys.where(
-        (~F.col("_deleted")) | (F.col("ts") >= F.lit(watermark_ts))
     )
 
 

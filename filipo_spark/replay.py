@@ -1,16 +1,18 @@
 """Epoch-fenced, exactly-once replay of a change log into an Icelet table.
 
-The batch-mode twin of the Structured Streaming tail (streaming/tail.py);
-both funnel through ``IceletTable.apply_epoch`` (→ ``apply_batch``
-semantics) so a checkpointed stream and a bounded replay produce
-identical state — the BASELINE invariant.
+The batch-mode twin of the Structured Streaming tail (streaming/tail.py).
+All three drivers — ``run_replay``, ``run_drifted_replay`` and
+``tail_changelog`` — are loops that feed one shared ``epoch_step``
+(fence → health → realign → apply → compact), so a checkpointed stream
+and a bounded replay produce identical state and identical manifests —
+the BASELINE invariant.
 
 Exactly-once protocol:
   1. plan epochs as half-open LSN ranges ``(lo, hi]`` of ``batch_size``;
   2. before applying an epoch, consult the table manifest — a committed
      range is skipped (duplicate replay, kill/resume);
-  3. apply = LWW dedup → per-bucket copy-on-write MERGE → atomic
-     snapshot+manifest+pointer commit (table/icelet.py).
+  3. apply = bucket-aligned LWW fold of the batch → merge-on-read delta
+     files → atomic snapshot+pointer+manifest commit (table/icelet.py).
 
 Because MERGE is an associative LWW fold over ``(ts, lsn)``, replay from
 *any* checkpoint — including overlapping re-delivery — converges to the
@@ -51,6 +53,151 @@ class ReplayReport:
         return sum(c.n_rows for c in self.commits)
 
 
+@dataclass
+class DriverRun:
+    """What one driver run carries from epoch to epoch.
+
+    ``heal`` turns on the per-epoch health check and realign (the
+    drifted replay, and the tail with ``auto_realign``).  ``events``
+    holds the current mapping's evolution events until a commit carries
+    them: the first commit of the run under a seed mapping or a fresh
+    realign.  ``committed`` is the manifest fence, read once per run and
+    extended by the run's own commits.  ``seen`` counts the epochs
+    handed to the step (the health cadence), ``applied`` the epochs it
+    committed (the compaction cadence)."""
+
+    table: IceletTable
+    mapping: object = None
+    heal: bool = False
+    drift_threshold: float | None = None
+    health_sample: int = 1024
+    align_kwargs: dict | None = None
+    key_check_every: int | None = None
+    echo_check_every: int = 0
+    compact_every: int = 0
+    compact_min_files: int = 8
+    events: list[str] = field(default_factory=list)
+    committed: set[tuple[int, int]] = field(init=False)
+    seen: int = 0
+    applied: int = 0
+    realigns: list[dict] = field(default_factory=list)
+
+    def __post_init__(self):
+        self.committed = self.table.committed_ranges()
+        if self.mapping is not None:
+            self.events = list(self.mapping.evolution_events)
+
+
+def epoch_step(
+    spark: SparkSession,
+    run: DriverRun,
+    batch: DataFrame,
+    epoch: int,
+    lo: int | None = None,
+    hi: int | None = None,
+    scope: str = "epoch",
+) -> CommitResult | None:
+    """Apply one epoch of ``batch`` to ``run.table`` exactly once.
+
+    ``(lo, hi]`` is the epoch's offset range; ``None`` takes it from
+    the batch's LSN bounds (a micro-batch — lsn passes the mapping
+    projection untouched), and an empty micro-batch returns ``None``
+    without committing anything.  An already-fenced range returns a
+    skipped result before any other work.
+
+    With ``run.heal``, the batch is persisted for the step (it is read
+    2-4×: bounds, health sample, the align probe, the apply) and its
+    mapping health is observed on a bounded sample (align/drift.py).
+    ``key_check_every=k`` adds the ``key_miss_ratio`` term on every k-th
+    epoch (``None``: every epoch when the table keeps a key bloom
+    sketch, else off); ``echo_check_every=k`` adds the sampled echo
+    audit.  When a ratio crosses the threshold — or no mapping exists
+    yet and the epoch is not empty — ``align()`` re-learns the mapping
+    from the batch against the table's current resolved state, and the
+    swap is fenced as a ``realign:<scope>=<epoch>`` evolution event.
+    ``align`` and ``mapping_health`` are looked up at call time.
+    """
+    table = run.table
+    if run.heal:
+        batch = batch.persist()
+    try:
+        bounded = lo is None
+        if bounded:
+            b = batch.agg(F.min("lsn").alias("lo"), F.max("lsn").alias("hi")).collect()[0]
+            if b["lo"] is None:
+                return None
+            lo, hi = int(b["lo"]) - 1, int(b["hi"])
+        seq, run.seen = run.seen, run.seen + 1
+        if (lo, hi) in run.committed:
+            return CommitResult(epoch=epoch, snapshot_id=None, skipped=True)
+        if run.heal:
+            from filipo_spark.align import align
+            from filipo_spark.align.drift import (
+                DRIFT_THRESHOLD,
+                mapping_health,
+                realign_event,
+                should_realign,
+            )
+
+            health = None
+            if run.mapping is None:
+                # learn from the first epoch with rows: the bounds showed
+                # them, else one bounded limit(1) job on the persisted slice
+                relearn = bounded or bool(batch.limit(1).count())
+            else:
+                kce = run.key_check_every
+                if kce is None:
+                    kce = 1 if table.bloom_bits else 0
+                tkeys = None
+                if kce and seq % kce == 0:
+                    # the sketch when available (no table read; reloaded
+                    # per check — this run's commits add keys), else the
+                    # documented column-pruned key scan
+                    tkeys = (
+                        table.key_bloom()
+                        if table.bloom_bits
+                        else table.read_raw(spark).select("conv_id", "turn_idx")
+                    )
+                echo = run.echo_check_every
+                health = mapping_health(
+                    batch, run.mapping, run.health_sample, target_keys=tkeys,
+                    echo_table=table if echo and seq % echo == 0 else None,
+                )
+                relearn = should_realign(
+                    health,
+                    DRIFT_THRESHOLD if run.drift_threshold is None else run.drift_threshold,
+                )
+            if relearn:
+                run.mapping = align(batch, table.read_logical(spark), **(run.align_kwargs or {}))
+                event = realign_event(f"{scope}={epoch}", lo, hi, health, run.mapping)
+                run.events = [event] + list(run.mapping.evolution_events)
+                run.realigns.append(
+                    {"epoch": epoch, "offset_lo": lo, "offset_hi": hi,
+                     "health": health, "event": event}
+                )
+        typed = batch
+        if run.mapping is not None:
+            from filipo_spark.align import apply_mapping
+
+            typed = apply_mapping(batch, run.mapping)
+        elif run.heal:  # an empty epoch before any mapping exists
+            from filipo_spark.schema import CHANGE_SCHEMA
+
+            typed = spark.createDataFrame([], CHANGE_SCHEMA)
+        res = table.apply_epoch(spark, typed, epoch, lo, hi, evolution_events=run.events)
+    finally:
+        if run.heal:
+            batch.unpersist()
+    if res.skipped:  # fenced by another writer since this run began
+        return res
+    run.committed.add((lo, hi))
+    run.events = []
+    run.applied += 1
+    if run.compact_every and run.applied % run.compact_every == 0:
+        table.compact(spark, min_files=run.compact_min_files, epoch=epoch)
+    return res
+
+
 def plan_epochs(lsn_min: int, lsn_max: int, batch_size: int) -> list[tuple[int, int]]:
     """Half-open (lo, hi] ranges covering [lsn_min, lsn_max]."""
     ranges = []
@@ -62,13 +209,55 @@ def plan_epochs(lsn_min: int, lsn_max: int, batch_size: int) -> list[tuple[int, 
     return ranges
 
 
+def _replay(
+    spark: SparkSession,
+    run: DriverRun,
+    source: DataFrame,
+    batch_size: int,
+    bounds: tuple[int, int, int] | None,
+    epochs: list[tuple[int, int]] | None = None,
+    max_epochs: int | None = None,
+) -> ReplayReport:
+    """Plan the epochs of ``source`` and feed them to ``epoch_step``.
+
+    Explicit ``epochs`` need no extent scan (a full source scan), so
+    without ``bounds`` ``events_seen`` stays unknown; an entirely empty
+    source then returns WITHOUT fencing the ranges as committed empty
+    epochs — the data may simply not have landed yet, and a fenced range
+    would be skipped forever on the later replay.  That check is one
+    bounded job (stops at the first row found)."""
+    report = ReplayReport(mapping=run.mapping)
+    if bounds is None and epochs is None:
+        row = source.agg(
+            F.min("lsn").alias("lo"), F.max("lsn").alias("hi"), F.count("*").alias("n")
+        ).collect()[0]
+        bounds = (row["lo"], row["hi"], row["n"])
+    if bounds is not None:
+        report.events_seen = bounds[2] or 0
+        if not bounds[2]:
+            return report
+    elif not source.limit(1).count():
+        return report
+    if epochs is None:
+        epochs = plan_epochs(bounds[0], bounds[1], batch_size)
+    for epoch, (lo, hi) in enumerate(epochs[:max_epochs]):
+        batch = source.where((F.col("lsn") > lo) & (F.col("lsn") <= hi))
+        res = epoch_step(spark, run, batch, epoch, lo, hi)
+        if res.skipped:
+            report.epochs_skipped += 1
+        else:
+            report.commits.append(res)
+            report.epochs_applied += 1
+    report.realigns, report.mapping = run.realigns, run.mapping
+    return report
+
+
 def run_replay(
     spark: SparkSession,
     table: IceletTable,
     source: DataFrame,
     batch_size: int = 100_000,
     max_epochs: int | None = None,
-    fail_after_data_write_on_epoch: int | None = None,
     compact_every: int = 0,
     compact_min_files: int = 8,
     bounds: tuple[int, int, int] | None = None,
@@ -81,36 +270,12 @@ def run_replay(
     planning aggregation when the caller already knows the log extent
     (a CDC coordinator reading a binlog/Kafka source always does — the
     broker hands it the offset range; re-scanning the log to rediscover
-    it is a wasted job per replay).  ``fail_after_data_write_on_epoch``
-    is a test hook simulating a crash after data files land but before
-    the commit pointer swaps (the dangerous window of any two-phase
-    commit).
+    it is a wasted job per replay).  The epoch slices are not persisted:
+    each is read exactly once, by the apply.
     """
-    if bounds is None:
-        row = source.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi"), F.count("*").alias("n")
-        ).collect()[0]
-        bounds = (row["lo"], row["hi"], row["n"])
-    report = ReplayReport(events_seen=bounds[2] or 0)
-    if not bounds[2]:
-        return report
-    ranges = plan_epochs(bounds[0], bounds[1], batch_size)
-    committed = table.committed_ranges()
-    for epoch, (lo, hi) in enumerate(ranges):
-        if max_epochs is not None and epoch >= max_epochs:
-            break
-        if (lo, hi) in committed:
-            report.epochs_skipped += 1
-            continue
-        batch = source.where((F.col("lsn") > lo) & (F.col("lsn") <= hi))
-        if fail_after_data_write_on_epoch == epoch:
-            _crash_mid_commit(spark, table, batch, epoch, lo, hi)
-        res = table.apply_epoch(spark, batch, epoch, lo, hi)
-        report.commits.append(res)
-        report.epochs_applied += 1
-        if compact_every and report.epochs_applied % compact_every == 0:
-            table.compact(spark, min_files=compact_min_files, epoch=epoch)
-    return report
+    run = DriverRun(table, compact_every=compact_every,
+                    compact_min_files=compact_min_files)
+    return _replay(spark, run, source, batch_size, bounds, max_epochs=max_epochs)
 
 
 def run_drifted_replay(
@@ -160,135 +325,10 @@ def run_drifted_replay(
     ``(lo, hi]`` ranges (Kafka-style offset assignment); otherwise
     epochs are planned exactly like ``run_replay``.
     """
-    from filipo_spark.align import align, apply_mapping
-    from filipo_spark.align.drift import (
-        DRIFT_THRESHOLD,
-        mapping_health,
-        realign_event,
-        should_realign,
+    run = DriverRun(
+        table, mapping, heal=True, drift_threshold=drift_threshold,
+        health_sample=health_sample, align_kwargs=align_kwargs,
+        key_check_every=key_check_every, echo_check_every=echo_check_every,
+        compact_every=compact_every, compact_min_files=compact_min_files,
     )
-    from filipo_spark.schema import CHANGE_SCHEMA
-
-    threshold = DRIFT_THRESHOLD if drift_threshold is None else drift_threshold
-    align_kwargs = align_kwargs or {}
-    if bounds is None and epochs is None:
-        # LSN-range planning needs the log extent; explicit Kafka-style
-        # ranges do NOT — the planning aggregation is a full source
-        # scan, so it is skipped whenever the caller already fixed the
-        # ranges (events_seen is then unknown unless bounds are passed;
-        # rows_committed and the manifest's n_rows still count the work)
-        row = drifted.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi"), F.count("*").alias("n")
-        ).collect()[0]
-        bounds = (row["lo"], row["hi"], row["n"])
-    report = ReplayReport(
-        events_seen=(bounds[2] or 0) if bounds is not None else None, mapping=mapping
-    )
-    if bounds is not None and not bounds[2]:
-        return report
-    if bounds is None and not drifted.limit(1).count():
-        # an entirely empty source must return WITHOUT fencing the
-        # explicit ranges as committed empty epochs — the data may
-        # simply not have landed yet, and a fenced range would be
-        # skipped forever on the later replay.  One bounded job (stops
-        # at the first row found), not the full extent scan this path
-        # used to pay.
-        return report
-    ranges = epochs if epochs is not None else plan_epochs(
-        bounds[0], bounds[1], batch_size
-    )
-    committed = table.committed_ranges()
-    if key_check_every is None:
-        key_check_every = 1 if table.bloom_bits else 0
-    for epoch, (lo, hi) in enumerate(ranges):
-        if (lo, hi) in committed:
-            report.epochs_skipped += 1
-            continue
-        # the epoch slice is consumed 2-3×: health sample, the align()
-        # probe sample on a realign, and the full apply.  Unlike the
-        # undrifted replay (exactly ONE pass per epoch — no cache there),
-        # that reuse justifies a persist: upstream of this DataFrame may
-        # be an arbitrary source lineage, and re-deriving it per action
-        # multiplies the dominant cost of a realigning epoch.  Standard
-        # micro-batch shape: MEMORY_AND_DISK, released before the next
-        # epoch.
-        batch = drifted.where((F.col("lsn") > lo) & (F.col("lsn") <= hi)).persist()
-        try:
-            tkeys = None
-            if mapping is not None and key_check_every and epoch % key_check_every == 0:
-                # sketch when available (bounded job, no table read; reloaded
-                # per check — THIS replay's commits add keys); else the
-                # documented column-pruned key scan
-                tkeys = (
-                    table.key_bloom()
-                    if table.bloom_bits
-                    else table.read_raw(spark).select("conv_id", "turn_idx")
-                )
-            echo_tbl = (
-                table
-                if mapping is not None and echo_check_every
-                and epoch % echo_check_every == 0
-                else None
-            )
-            health = (
-                None
-                if mapping is None
-                else mapping_health(
-                    batch, mapping, health_sample, target_keys=tkeys,
-                    echo_table=echo_tbl,
-                )
-            )
-            batch_nonempty = True
-            if mapping is None:
-                # epoch emptiness, judged per mapping-less epoch on the
-                # already-persisted slice (one bounded limit(1) job —
-                # the scan stops at the first row found, and the work
-                # feeds the persist the next action needs anyway).  This
-                # replaces the former grouped attribution scan over the
-                # FULL source: no job at all runs once a mapping exists,
-                # and because each epoch's own range filter decides,
-                # overlapping or duplicate explicit Kafka-style ranges
-                # can no longer mis-attribute a shared row to a single
-                # epoch and silently drop the other's (ADVICE r5).
-                batch_nonempty = bool(batch.limit(1).count())
-            evo: list[str] = []
-            if (mapping is None and batch_nonempty) or (
-                health is not None and should_realign(health, threshold)
-            ):
-                mapping = align(batch, table.read_logical(spark), **align_kwargs)
-                evo = [realign_event(f"epoch={epoch}", lo, hi, health, mapping)] + list(
-                    mapping.evolution_events
-                )
-                report.realigns.append(
-                    {"epoch": epoch, "offset_lo": lo, "offset_hi": hi,
-                     "health": health, "event": evo[0]}
-                )
-                report.mapping = mapping
-            if mapping is None:  # empty batch before any mapping exists
-                typed = spark.createDataFrame([], CHANGE_SCHEMA)
-            else:
-                typed = apply_mapping(batch, mapping)
-            res = table.apply_epoch(spark, typed, epoch, lo, hi, evolution_events=evo)
-        finally:
-            batch.unpersist()
-        report.commits.append(res)
-        report.epochs_applied += 1
-        if compact_every and report.epochs_applied % compact_every == 0:
-            table.compact(spark, min_files=compact_min_files, epoch=epoch)
-    return report
-
-
-def _crash_mid_commit(spark, table, batch, epoch, lo, hi) -> None:
-    """Write data files exactly as a real commit would, then raise —
-    leaving orphans that no snapshot references."""
-    from filipo_spark.operators.dedup import lww_dedup
-    from filipo_spark.operators.merge import bucket_of, merge_upserts
-    import os
-
-    winners = lww_dedup(batch).withColumn("_b", bucket_of(F.col("conv_id"), table.n_buckets))
-    touched = sorted(r["_b"] for r in winners.select("_b").distinct().collect())
-    old = table.read(spark, buckets=touched)
-    new_phys = merge_upserts(old, winners.drop("_b"))
-    orphan_dir = os.path.join(table.root, "data", "b=0", "snap-orphan-crash")
-    new_phys.write.mode("overwrite").parquet(orphan_dir)
-    raise RuntimeError(f"simulated crash mid-commit of epoch {epoch} ({lo},{hi}]")
+    return _replay(spark, run, drifted, batch_size, bounds, epochs=epochs)

@@ -1,10 +1,11 @@
 """Structured Streaming tail of the change log into an Icelet table.
 
-The streaming twin of ``replay.run_replay`` — both funnel every
-micro-batch through ``IceletTable.apply_epoch`` (LWW dedup+MERGE +
-manifest-fenced commit), so a checkpointed stream and a bounded batch
-replay produce identical state.  This is the ``foreachBatch`` pattern
-the north_star mandates: one shared apply function, two drivers.
+The streaming twin of ``replay.run_replay``: every micro-batch goes
+through the same ``replay.epoch_step`` (fence → health → realign →
+apply → compact), so a checkpointed stream and a bounded batch replay
+produce identical state and identical manifests.  This is the
+``foreachBatch`` pattern the north_star mandates: one shared apply
+function, several drivers.
 
 Exactly-once composition:
 * Structured Streaming's checkpoint guarantees at-least-once delivery of
@@ -14,8 +15,8 @@ Exactly-once composition:
 * and even a *torn* fence would be safe: the LWW MERGE fold is
   idempotent by construction.
 Watermarks are deliberately unnecessary for correctness — max-(ts,lsn)
-merge is order-insensitive (SURVEY §2.9); ``withWatermark`` only bounds
-tombstone GC via ``compact()``.
+merge is order-insensitive (SURVEY §2.9).  Tombstones are retained:
+no watermark GC exists yet (an open ROADMAP.md item).
 
 Throttling: ``maxFilesPerTrigger`` is the engine's analog of the
 reference's 500 ms politeness delay on its serial HTTP source
@@ -26,9 +27,9 @@ the source, not sleeps in the operator.
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from filipo_spark.schema import CHANGE_SCHEMA
+from filipo_spark.replay import DriverRun, epoch_step
+from filipo_spark.schema import CHANGE_SCHEMA, DRIFTED_JSON_SCHEMA, DRIFTED_SCHEMA
 from filipo_spark.table.icelet import IceletTable
 
 
@@ -76,140 +77,49 @@ def tail_changelog(
     first non-empty micro-batch against the table's current resolved
     state (same ``reason=init`` fence the replay path writes) — a
     pure-streaming deployment needs no manual batch alignment step.
-    ``key_check_every=k`` adds the opt-in ``key_miss_ratio`` health term
-    on every k-th applied batch; the default (``None``) auto-resolves to
-    every batch when the table maintains a key bloom sketch (the probe
-    is then one bounded job with zero table I/O, table/sketch.py), else
-    off.  ``echo_check_every=k`` adds the sampled echo audit
-    (``echo_mismatch_ratio``) on every k-th batch — see align/drift.py
-    for both terms' cost notes.
+    ``key_check_every`` and ``echo_check_every`` add the opt-in health
+    terms on every k-th batch, as in ``replay.run_drifted_replay``.
+    Every micro-batch runs through ``replay.epoch_step``.
     """
-    if source_format is not None:
-        if source_format not in ("drifted", "json"):
-            raise ValueError(f"unknown source_format: {source_format!r}")
-        if mapping is None and not auto_realign:
-            raise ValueError(
-                "a drifted source without a mapping needs auto_realign=True "
-                "(bootstrap from the first micro-batch) — raw payload rows "
-                "cannot be applied to the table"
-            )
-        if source_format == "json":
-            from filipo_spark.schema import DRIFTED_JSON_SCHEMA
-
-            stream = spark.readStream.schema(DRIFTED_JSON_SCHEMA)
-        else:
-            from filipo_spark.schema import DRIFTED_SCHEMA
-
-            stream = spark.readStream.schema(DRIFTED_SCHEMA)
-    elif mapping is None:
-        if auto_realign:
-            raise ValueError(
-                "auto_realign without a seed mapping requires source_format="
-                "'drifted'|'json' (the wire shape must be declared at "
-                "readStream time to bootstrap the mapping in-stream)"
-            )
-        stream = spark.readStream.schema(CHANGE_SCHEMA)
-    elif getattr(mapping, "payload_json_schema", None):
-        # raw-JSON wire WAL: the mapping carries the payload schema
+    if source_format not in (None, "drifted", "json"):
+        raise ValueError(f"unknown source_format: {source_format!r}")
+    if source_format and mapping is None and not auto_realign:
+        raise ValueError(
+            "a drifted source without a mapping needs auto_realign=True "
+            "(bootstrap from the first micro-batch) — raw payload rows "
+            "cannot be applied to the table"
+        )
+    if not source_format and mapping is None and auto_realign:
+        raise ValueError(
+            "auto_realign without a seed mapping requires source_format="
+            "'drifted'|'json' (the wire shape must be declared at "
+            "readStream time to bootstrap the mapping in-stream)"
+        )
+    if not source_format and mapping is not None:
+        # a raw-JSON wire WAL: the mapping carries the payload schema
         # captured at align() time, so no inference runs on the stream
-        from filipo_spark.schema import DRIFTED_JSON_SCHEMA
-
-        stream = spark.readStream.schema(DRIFTED_JSON_SCHEMA)
-    else:
-        from filipo_spark.schema import DRIFTED_SCHEMA
-
-        stream = spark.readStream.schema(DRIFTED_SCHEMA)
+        source_format = "json" if getattr(mapping, "payload_json_schema", None) else "drifted"
+    schema = {None: CHANGE_SCHEMA, "drifted": DRIFTED_SCHEMA, "json": DRIFTED_JSON_SCHEMA}
+    stream = spark.readStream.schema(schema[source_format])
     if max_files_per_trigger:
         stream = stream.option("maxFilesPerTrigger", max_files_per_trigger)
     df = stream.parquet(source_dir)
 
+    run = DriverRun(
+        table, mapping, heal=auto_realign, drift_threshold=drift_threshold,
+        health_sample=health_sample, align_kwargs=align_kwargs,
+        key_check_every=key_check_every, echo_check_every=echo_check_every,
+        compact_every=compact_every, compact_min_files=compact_min_files,
+    )
     stats = {"batches": 0, "skipped": 0, "realigns": 0, "mapping": mapping}
 
     def apply_fn(batch_df, batch_id: int) -> None:
-        # a healing tail consumes the micro-batch 2-4× (bounds, health
-        # sample, align probe, apply) — persist it for the batch's
-        # lifetime, the standard foreachBatch-reuse shape
-        if auto_realign:
-            batch_df = batch_df.persist()
-        try:
-            _apply_inner(batch_df, batch_id)
-        finally:
-            if auto_realign:
-                batch_df.unpersist()
-
-    def _apply_inner(batch_df, batch_id: int) -> None:
-        # lsn passes through the mapping projection untouched, so bounds
-        # are computed ONCE on the raw batch (also the realign fence)
-        bounds = batch_df.agg(F.min("lsn").alias("lo"), F.max("lsn").alias("hi")).collect()[0]
-        if bounds["lo"] is None:
+        res = epoch_step(spark, run, batch_df, int(batch_id), scope="batch")
+        if res is None:  # empty micro-batch
             return
-        m = stats["mapping"]
-        evo: list[str] = []
-        if auto_realign and (m is not None or source_format is not None):
-            from filipo_spark.align import align
-            from filipo_spark.align.drift import (
-                DRIFT_THRESHOLD,
-                mapping_health,
-                realign_event,
-                should_realign,
-            )
-
-            if m is None:
-                # mapping-less bootstrap: learn the function store from
-                # this (first non-empty) micro-batch, fenced as
-                # reason=init exactly like replay's first drifted epoch
-                health = None
-                relearn = True
-            else:
-                kce = key_check_every
-                if kce is None:
-                    kce = 1 if table.bloom_bits else 0
-                tkeys = None
-                if kce and stats["batches"] % kce == 0:
-                    tkeys = (
-                        table.key_bloom()
-                        if table.bloom_bits
-                        else table.read_raw(spark).select("conv_id", "turn_idx")
-                    )
-                echo_tbl = (
-                    table
-                    if echo_check_every
-                    and stats["batches"] % echo_check_every == 0
-                    else None
-                )
-                health = mapping_health(
-                    batch_df, m, health_sample, target_keys=tkeys,
-                    echo_table=echo_tbl,
-                )
-                thr = DRIFT_THRESHOLD if drift_threshold is None else drift_threshold
-                relearn = should_realign(health, thr)
-            if relearn:
-                m = align(
-                    batch_df, table.read_logical(spark), **(align_kwargs or {})
-                )
-                stats["mapping"] = m
-                stats["realigns"] += 1
-                evo = [
-                    realign_event(
-                        f"batch={int(batch_id)}",
-                        int(bounds["lo"]) - 1, int(bounds["hi"]), health, m,
-                    )
-                ]
-        if m is not None:
-            from filipo_spark.align import apply_mapping
-
-            batch_df = apply_mapping(batch_df, m)
-            evo = evo + list(m.evolution_events)
-        res = table.apply_epoch(
-            spark, batch_df, epoch=int(batch_id),
-            offset_lo=int(bounds["lo"]) - 1, offset_hi=int(bounds["hi"]),
-            evolution_events=evo,
-        )
         stats["batches"] += 1
         stats["skipped"] += int(res.skipped)
-        applied = stats["batches"] - stats["skipped"]
-        if compact_every and not res.skipped and applied % compact_every == 0:
-            table.compact(spark, min_files=compact_min_files, epoch=int(batch_id))
+        stats["realigns"], stats["mapping"] = len(run.realigns), run.mapping
 
     writer = df.writeStream.foreachBatch(apply_fn).option(
         "checkpointLocation", checkpoint_dir

@@ -21,9 +21,8 @@ a consumer that fell behind can still catch up across a compaction as
 long as the window's snapshots have not been expired
 (``IceletTable.expire_snapshots``).  Beyond that retention horizon the
 lineage check refuses and the consumer re-reads a full snapshot.  The
-feed is undefined for copy-on-write tables (COW appends rewrite whole
-buckets, so file deltas are not change deltas) and across ``bootstrap``
-commits (full-state reseed) — both refuse loudly.
+feed is undefined across ``bootstrap`` commits (full-state reseed) and
+refuses loudly there.
 
 Scale shape: the feed reads ONLY the delta files of the window (an
 explicit file list — no directory listing, no touch of the base data),
@@ -63,22 +62,13 @@ def changes_between(
     role, text, tool, ts)`` with ``op`` ∈ {'U','D'} — the winning
     version in the window ('I' is not distinguishable from 'U' after
     the fold, matching upsert semantics).  Raises ``ValueError`` if the
-    table is copy-on-write (an epoch rewrites whole buckets, so file
-    deltas would report every key in every touched bucket as changed),
-    if the window crosses a ``bootstrap`` commit, if the snapshots are
+    window crosses a ``bootstrap`` commit, if the snapshots are
     not on the current (retained) lineage in from→to order, or if the
     window's delta files have been expired+vacuumed.
     """
     import json
     import os
 
-    if table.mode != "mor":
-        raise ValueError(
-            "change feed is only defined for merge-on-read tables: a "
-            f"{table.mode!r} append rewrites touched buckets to full resolved "
-            "state, so added files are not change deltas — read full "
-            "snapshots instead"
-        )
     chain = table.snapshot_ids()
     if to_snapshot_id is None:
         to_snapshot_id = table.current_snapshot_id()

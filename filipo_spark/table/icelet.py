@@ -15,16 +15,13 @@ Layout & semantics
   co-locates each conversation and gives MERGE/reads their pruning axis.
 * **Physical rows** carry ``(_lsn, _deleted)`` (operators/merge.py), so
   *any* union of data files resolves to the true state with one LWW
-  ``max_by`` fold — the key invariant that lets the same format serve
-  both write modes:
-  - **merge-on-read (default, ``mode="mor"``)**: an epoch writes ONLY
-    the batch winners as new delta files (O(batch) write amplification —
-    the only strategy that survives 10^10 events/day); readers fold
-    base+delta; ``compact()`` folds buckets back to one file when their
-    file count exceeds a threshold.
-  - **copy-on-write (``mode="cow"``)**: an epoch rewrites touched
-    buckets to their resolved state (O(bucket) writes, zero read
-    amplification — right for read-heavy, low-churn tables).
+  ``max_by`` fold.
+* **Merge-on-read** (the one write mode): an epoch writes ONLY the batch
+  winners as new delta files (O(batch) write amplification — the only
+  strategy that survives 10^10 events/day); readers fold base+delta;
+  ``compact()`` folds buckets back to one file when their file count
+  exceeds a threshold, and a full compaction gives a snapshot with one
+  version per key that reads without the fold (``delta_free``).
 * **Snapshots**: immutable JSON file lists; a commit replaces/appends
   file entries for touched buckets only and inherits the parent's for
   the rest — the same O(touched) metadata shape as an Iceberg manifest.
@@ -63,7 +60,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from filipo_spark.operators.merge import (
-    PHYS_COLUMNS,
     bucket_of,
     changes_to_physical,
     lww_resolve,
@@ -89,12 +85,10 @@ class CommitResult:
 
 
 class IceletTable:
-    def __init__(self, root: str, n_buckets: int = N_BUCKETS_DEFAULT, mode: str = "mor",
+    def __init__(self, root: str, n_buckets: int = N_BUCKETS_DEFAULT,
                  salt_factor: int = 2, bloom_bits: int = 0, bloom_k: int = 5):
-        assert mode in ("mor", "cow")
         self.root = root
         self.n_buckets = n_buckets
-        self.mode = mode
         self.salt_factor = salt_factor
         # bloom_bits > 0 maintains a key-membership sketch per snapshot
         # (table/sketch.py): every commit unions the staged batch's keys
@@ -120,15 +114,15 @@ class IceletTable:
     # --- lifecycle -----------------------------------------------------
     @classmethod
     def create(
-        cls, root: str, n_buckets: int = N_BUCKETS_DEFAULT, mode: str = "mor",
+        cls, root: str, n_buckets: int = N_BUCKETS_DEFAULT,
         salt_factor: int = 2, bloom_bits: int = 0, bloom_k: int = 5,
     ) -> "IceletTable":
-        t = cls(root, n_buckets, mode, salt_factor, bloom_bits, bloom_k)
+        t = cls(root, n_buckets, salt_factor, bloom_bits, bloom_k)
         os.makedirs(t._meta, exist_ok=True)
         os.makedirs(t._data, exist_ok=True)
         sid = "empty"
         snap = {"snapshot_id": sid, "parent": None, "epoch": -1,
-                "n_buckets": n_buckets, "mode": mode,
+                "n_buckets": n_buckets, "mode": "mor",
                 "salt_factor": salt_factor, "delta_free": True, "files": {}}
         if bloom_bits:
             from filipo_spark.table.sketch import KeyBloom
@@ -136,8 +130,7 @@ class IceletTable:
             rel = os.path.join("metadata", f"bloom-{sid}.bin")
             KeyBloom(bloom_bits, bloom_k).save(os.path.join(root, rel))
             snap["bloom"] = {"file": rel, "bits": bloom_bits, "k": bloom_k}
-        with open(t._snap_path(sid), "w") as f:
-            json.dump(snap, f)
+        t._write_snapshot(sid, snap)
         t._swap_current(sid)
         return t
 
@@ -145,8 +138,13 @@ class IceletTable:
     def load(cls, root: str) -> "IceletTable":
         t = cls(root)
         snap = t.current_snapshot()
+        if snap.get("mode", "mor") != "mor":
+            raise ValueError(
+                f"{root}: snapshot mode {snap['mode']!r} is not supported — "
+                "tables are merge-on-read only; rebuild the table from its "
+                "source or a full snapshot read"
+            )
         t.n_buckets = snap["n_buckets"]
-        t.mode = snap.get("mode", "mor")
         t.salt_factor = snap.get("salt_factor", 2)
         if "bloom" in snap:
             t.bloom_bits = snap["bloom"]["bits"]
@@ -154,6 +152,12 @@ class IceletTable:
         return t
 
     # --- metadata ------------------------------------------------------
+    def _write_snapshot(self, sid: str, snap: dict[str, Any]) -> None:
+        with open(self._snap_path(sid), "w") as f:
+            json.dump(snap, f, sort_keys=True)
+            f.flush()
+            os.fsync(f.fileno())
+
     def _swap_current(self, sid: str) -> None:
         tmp = os.path.join(self._meta, f".CURRENT.{uuid.uuid4().hex}.tmp")
         with open(tmp, "w") as f:
@@ -252,18 +256,21 @@ class IceletTable:
         if os.path.exists(p):
             os.remove(p)
 
-    def _append_manifest(self, row: dict[str, Any]) -> None:
+    def _append_manifest(self, res: CommitResult, **row: Any) -> CommitResult:
+        """Fence ``res``: its manifest line carries ``row`` (offsets,
+        kind, evolution events) and the commit's own counts."""
         import datetime
 
-        p = os.path.join(self._meta, "manifest.jsonl")
-        row = dict(
-            row,
+        row.update(
+            epoch=res.epoch, snapshot_id=res.snapshot_id, buckets=res.buckets,
+            n_rows=res.n_rows, n_files=res.n_files,
             committed_at=datetime.datetime.now(datetime.timezone.utc).isoformat(),
         )
-        with open(p, "a") as f:
+        with open(os.path.join(self._meta, "manifest.jsonl"), "a") as f:
             f.write(json.dumps(row, sort_keys=True) + "\n")
             f.flush()
             os.fsync(f.fileno())
+        return res
 
     # --- read ----------------------------------------------------------
     def _files_of(self, snap: dict[str, Any], buckets: list[int] | None = None) -> list[str]:
@@ -356,7 +363,7 @@ class IceletTable:
         return self._commit(
             to_physical(target), epoch, offset_lo=-1, offset_hi=-1,
             touched=list(range(self.n_buckets)), evolution_events=[],
-            replace=True, kind="bootstrap",
+            kind="bootstrap",
         )
 
     def apply_epoch(
@@ -368,52 +375,22 @@ class IceletTable:
         offset_hi: int,
         evolution_events: list[str] | None = None,
     ) -> CommitResult:
-        """One epoch: dedup/merge → data files → atomic commit.
+        """One epoch: the batch's LWW winners become delta files → atomic
+        commit.
 
         Idempotent: an (offset_lo, offset_hi] range already in the
-        manifest is skipped without touching data.
+        manifest is skipped without touching data.  O(batch) write: the
+        bucket-aligned resolve is ONE payload shuffle sized to the
+        session's task slots, ready for the partitionBy write; touched
+        buckets are discovered from the staging output dirs (no pre-scan
+        of the batch).
         """
         if (offset_lo, offset_hi) in self.committed_ranges():
             return CommitResult(epoch=epoch, snapshot_id=None, skipped=True)
-        if self.mode == "mor":
-            # O(batch) write: batch-local winners become delta files.
-            # Bucket-aligned resolve → ONE payload shuffle sized to the
-            # session's task slots, output ready for partitionBy write.
-            # Touched buckets are discovered from the staging output dirs
-            # (no extra pre-scan of the batch).
-            out = lww_resolve(changes_to_physical(changes), n_buckets=self.n_buckets,
-                              salt_factor=self.salt_factor)
-            touched = None
-            replace = False
-        else:
-            # O(touched buckets) write: rewrite resolved state; needs the
-            # touched set upfront (column-pruned scan of conv_id only)
-            touched = sorted(
-                r["_b"]
-                for r in changes.select(
-                    bucket_of(F.col("conv_id"), self.n_buckets).alias("_b")
-                ).distinct().collect()
-            )
-            if not touched:  # empty batch: manifest-only commit
-                sid = self.current_snapshot_id()
-                self._append_manifest(
-                    {"epoch": epoch, "offset_lo": offset_lo, "offset_hi": offset_hi,
-                     "snapshot_id": sid, "buckets": [], "n_rows": 0, "n_files": 0,
-                     "kind": "append",
-                     "evolution_events": evolution_events or []}
-                )
-                return CommitResult(epoch=epoch, snapshot_id=sid, skipped=False)
-            out = lww_resolve(
-                self.read_raw(spark, buckets=touched).unionByName(
-                    changes_to_physical(changes)
-                ),
-                n_buckets=self.n_buckets,
-                salt_factor=self.salt_factor,
-            )
-            replace = True
+        out = lww_resolve(changes_to_physical(changes), n_buckets=self.n_buckets,
+                          salt_factor=self.salt_factor)
         return self._commit(
-            out, epoch, offset_lo, offset_hi, touched,
-            evolution_events or [], replace=replace, kind="append",
+            out, epoch, offset_lo, offset_hi, None, evolution_events or [], kind="append",
         )
 
     def compact(
@@ -425,8 +402,8 @@ class IceletTable:
     ) -> CommitResult | None:
         """Fold buckets whose delta-file count exceeds ``min_files`` back
         to one resolved file each (MoR maintenance; bounds read
-        amplification).  Tombstones are retained — see merge.compact for
-        watermark-based GC."""
+        amplification).  Tombstones are retained: no watermark GC exists
+        yet (an open ROADMAP.md item)."""
         snap = self.current_snapshot()
         cands = [
             int(b) for b, fl in snap["files"].items()
@@ -443,7 +420,7 @@ class IceletTable:
         )
         return self._commit(
             resolved, epoch, offset_lo=None, offset_hi=None, touched=sorted(cands),
-            evolution_events=[], replace=True, kind="compact",
+            evolution_events=[], kind="compact",
         )
 
     def _commit(
@@ -454,9 +431,13 @@ class IceletTable:
         offset_hi: int | None,
         touched: list[int] | None,
         evolution_events: list[str],
-        replace: bool,
         kind: str,
     ) -> CommitResult:
+        """Write ``out_phys`` and commit it.  An append (``touched=None``)
+        adds its files to the buckets it wrote; a bootstrap or compaction
+        replaces the file lists of ``touched``.  The commit steps, in
+        order: data files placed → ``_write_snapshot`` →
+        ``_swap_current`` → ``_append_manifest``."""
         from pyspark.sql import Observation
 
         sid = f"{epoch:08d}-{uuid.uuid4().hex[:8]}"
@@ -497,22 +478,19 @@ class IceletTable:
             .parquet(staging)
         )
         n_rows = int(obs.get.get("rows_written", 0))
+        fence = dict(offset_lo=offset_lo, offset_hi=offset_hi, kind=kind,
+                     evolution_events=evolution_events)
         if touched is None:  # discover touched buckets from staging output
             touched = sorted(
                 int(d.split("=")[1])
                 for d in os.listdir(staging)
                 if d.startswith("_bucket=")
             )
-            if not touched:  # empty batch under MoR: manifest-only commit
+            if not touched:  # empty batch: manifest-only commit
                 shutil.rmtree(staging, ignore_errors=True)
-                sid0 = self.current_snapshot_id()
-                self._append_manifest(
-                    {"epoch": epoch, "offset_lo": offset_lo, "offset_hi": offset_hi,
-                     "snapshot_id": sid0, "buckets": [], "n_rows": 0, "n_files": 0,
-                     "kind": kind,
-                     "evolution_events": evolution_events}
+                return self._append_manifest(
+                    CommitResult(epoch, self.current_snapshot_id(), skipped=False), **fence
                 )
-                return CommitResult(epoch=epoch, snapshot_id=sid0, skipped=False)
         parent = self.current_snapshot()
         bloom_meta = parent.get("bloom")
         if not self.bloom_bits and bloom_meta:
@@ -533,9 +511,7 @@ class IceletTable:
             # fold the staged batch's keys into the parent's sketch: ONE
             # column-pruned O(batch) job; the collected word/mask set is
             # bounded by the filter size (table/sketch.py).  Monotone
-            # union is correct in every mode — "ever seen" must keep
-            # deleted keys, and a COW rewrite's key set is a superset
-            # re-add, which a bloom absorbs idempotently.
+            # union — "ever seen" must keep deleted keys.
             from filipo_spark.table.sketch import KeyBloom
 
             spark = out_phys.sparkSession
@@ -568,20 +544,19 @@ class IceletTable:
                     if fn.endswith(".parquet")
                 )
             n_files += len(bucket_files)
-            if replace:
-                files[str(b)] = bucket_files
-            else:
+            if kind == "append":
                 files[str(b)] = files.get(str(b), []) + bucket_files
+            else:
+                files[str(b)] = bucket_files
         shutil.rmtree(staging, ignore_errors=True)
         # delta-free tracking (the Iceberg no-delete-files read path):
         # when every retained file is known to hold exactly one version
         # per key, readers skip the LWW resolve fold outright — no
         # exchange, no sort (read()).  True after a bootstrap (replace
         # of everything), after a first append into an empty table (the
-        # batch was folded before writing), preserved by COW appends
-        # over a delta-free parent (touched buckets are rewritten
-        # resolved) and by a compaction that rewrote every non-empty
-        # bucket; any MOR append onto existing data clears it.
+        # batch was folded before writing), preserved or restored by a
+        # compaction that rewrote every non-empty bucket; any append
+        # onto existing data clears it.
         if kind == "bootstrap":
             delta_free = True
         elif kind == "compact":
@@ -589,8 +564,6 @@ class IceletTable:
                 {str(b) for b in touched}
                 >= {b for b, fl in parent["files"].items() if fl}
             )
-        elif replace:
-            delta_free = parent.get("delta_free", False)
         else:
             delta_free = not any(parent["files"].values())
         snap = {
@@ -598,7 +571,7 @@ class IceletTable:
             "parent": parent["snapshot_id"],
             "epoch": epoch,
             "n_buckets": self.n_buckets,
-            "mode": self.mode,
+            "mode": "mor",
             "salt_factor": self.salt_factor,
             "delta_free": delta_free,
             "files": files,
@@ -615,19 +588,10 @@ class IceletTable:
         # The reverse order (manifest before pointer) would fence the
         # range while readers stay on the parent snapshot: the epoch would
         # be silently lost and its files vacuumed.
-        with open(self._snap_path(sid), "w") as f:
-            json.dump(snap, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
+        self._write_snapshot(sid, snap)
         self._swap_current(sid)
-        self._append_manifest(
-            {"epoch": epoch, "offset_lo": offset_lo, "offset_hi": offset_hi,
-             "snapshot_id": sid, "buckets": touched, "n_rows": n_rows,
-             "n_files": n_files, "kind": kind, "evolution_events": evolution_events}
-        )
-        return CommitResult(
-            epoch=epoch, snapshot_id=sid, skipped=False, buckets=touched,
-            n_rows=n_rows, n_files=n_files,
+        return self._append_manifest(
+            CommitResult(epoch, sid, False, touched, n_rows, n_files), **fence
         )
 
     # --- maintenance ---------------------------------------------------

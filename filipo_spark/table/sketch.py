@@ -14,7 +14,8 @@ probe's semantics exactly: "ever seen" must include deleted keys — an
 UPDATE or DELETE addressing a key that once existed is normal CDC
 traffic, while a *corrupted* key (e.g. ``conv_id`` arriving prefixed)
 has never been seen under any snapshot.  Hence union-with-parent on
-every commit, including copy-on-write rewrites and compactions.
+every commit that adds keys; a compaction adds none and shares its
+parent's sketch.
 
 False positives (the bloom's only error mode) can only UNDER-count
 misses — the probe may report a slightly lower ``key_miss_ratio`` than

@@ -160,18 +160,6 @@ def test_feed_refuses_beyond_retention(spark, replayed):
     assert state.count() > 0  # current snapshot unharmed
 
 
-def test_feed_refuses_cow_table(spark, tmp_path):
-    """COW appends rewrite whole touched buckets, so file deltas are not
-    change deltas — the feed must refuse (ADVICE r3: silently wrong
-    before, reporting every key in every touched bucket)."""
-    log = gen_changelog(spark, n_conv=10, n_events=400, seed=5)
-    lo, hi = log.agg(F.min("lsn"), F.max("lsn")).collect()[0]
-    t = IceletTable.create(str(tmp_path / "cow"), n_buckets=4, mode="cow")
-    run_replay(spark, t, log, batch_size=(hi - lo) // 2 + 1)
-    with pytest.raises(ValueError, match="merge-on-read"):
-        changes_between(spark, t, "empty")
-
-
 def test_maintain_cli_compact_expire_vacuum(spark, replayed, capsys):
     """jobs/maintain.py: the three levers in safe order, JSON summary."""
     import json

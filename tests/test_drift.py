@@ -436,3 +436,90 @@ def test_explicit_epochs_report_rows_committed(spark, base, tmp_path):
     assert report.events_seen is None
     appends = [m for m in table.manifest() if m["kind"] == "append"]
     assert report.rows_committed == sum(m["n_rows"] for m in appends) == target.count()
+
+
+def test_drifted_replay_and_tail_write_the_same_manifest(spark, base, tmp_path):
+    """The drivers share one epoch step: the same drifted input (one
+    file per offset range, the wire shape flipping in the second) fed
+    through ``run_drifted_replay`` with explicit epochs and through
+    ``tail_changelog`` one file per micro-batch, onto equal bootstraps,
+    writes the same manifest — offsets, buckets, rows, files and
+    evolution events up to the ``epoch=``/``batch=`` label — and the
+    same final state."""
+    from filipo_spark.streaming.tail import tail_changelog
+
+    target, _ = base
+    src = str(tmp_path / "wal")
+    ranges = []
+    for part in (
+        gen_drifted(gen_echo_changelog(target, start_lsn=BASE), "rename"),
+        gen_drifted(
+            gen_echo_changelog(_mutated(target), start_lsn=BASE + SPAN), "nested"
+        ),
+    ):
+        part.coalesce(1).write.mode("append").parquet(src)
+        lo, hi = part.agg(F.min("lsn"), F.max("lsn")).collect()[0]
+        ranges.append((lo - 1, hi))
+    replayed, tailed = (
+        IceletTable.create(str(tmp_path / name), n_buckets=4) for name in ("r", "t")
+    )
+    for t in (replayed, tailed):
+        t.bootstrap(target)
+    report = run_drifted_replay(spark, replayed, spark.read.parquet(src), epochs=ranges)
+    stats = tail_changelog(
+        spark, src, tailed, str(tmp_path / "ckpt"), max_files_per_trigger=1,
+        auto_realign=True, source_format="drifted",
+    )
+    assert len(report.realigns) == stats["realigns"] == 2
+
+    def lineage(t):
+        keys = ("kind", "epoch", "offset_lo", "offset_hi", "buckets", "n_rows", "n_files")
+        return [
+            {k: m[k] for k in keys} | {"evolution_events": [
+                e.replace("realign:batch=", "realign:epoch=", 1)
+                for e in m["evolution_events"]
+            ]}
+            for m in t.manifest()
+        ]
+
+    assert lineage(replayed) == lineage(tailed)
+    assert [m["offset_lo"] for m in lineage(tailed)[1:]] == [lo for lo, _ in ranges]
+    want = df_rows(_mutated(target))
+    assert df_rows(replayed.read_logical(spark)) == want
+    assert df_rows(tailed.read_logical(spark)) == want
+
+
+def test_replay_job_cli_plain_and_auto_realign(spark, base, tmp_path, capsys):
+    """jobs/replay.py main(): a plain change log and, with
+    ``--auto-realign``, a drifted one whose mapping is learned on the
+    first epoch; both onto a ``--bootstrap`` seed, both print the JSON
+    summary."""
+    import json
+
+    from filipo_spark.jobs import replay as replay_job
+
+    target, _ = base
+    seed = str(tmp_path / "seed")
+    target.write.parquet(seed)
+    echo = gen_echo_changelog(_mutated(target), start_lsn=BASE)
+    for name, source, extra in (
+        ("plain", echo, []),
+        ("drifted", gen_drifted(echo, "rename"), ["--auto-realign"]),
+    ):
+        src, tbl = str(tmp_path / f"{name}-src"), str(tmp_path / f"{name}-tbl")
+        source.write.parquet(src)
+        replay_job.main([
+            "--source", src, "--table", tbl, "--n-buckets", "4",
+            "--batch-size", str(2 * SPAN), "--bootstrap", seed, *extra,
+        ])
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert out["epochs_applied"] == 1 and out["epochs_skipped"] == 0
+        assert out["events_seen"] == echo.count() > 0
+        assert df_rows(IceletTable.load(tbl).read_logical(spark)) == df_rows(
+            _mutated(target)
+        )
+        if extra:
+            [realign] = out["realigns"]
+            assert realign["epoch"] == 0 and "reason=init" in realign["event"]
+        else:
+            assert "realigns" not in out

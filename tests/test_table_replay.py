@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import json
+import pathlib
 
 import pytest
 
@@ -50,54 +51,58 @@ def test_replay_duplicate_run_skips_all(spark, tmp_path, log):
     assert df_rows(canonical(t.read_logical(spark))) == before
 
 
-def test_replay_kill_resume(spark, tmp_path, log):
-    want = expected_state(spark, log)
-    t = IceletTable.create(str(tmp_path / "t"), n_buckets=8)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        run_replay(spark, t, log, batch_size=600, fail_after_data_write_on_epoch=2)
-    # crash left epochs 0-1 committed, epoch 2 data orphaned, pointer intact
-    assert len(t.manifest()) == 2
-    mid = t.read_logical(spark)
-    assert mid.count() > 0  # table still readable (old snapshot live)
-    # resume: re-run the same replay — committed epochs skip, rest apply
-    r = run_replay(spark, t, log, batch_size=600)
-    assert r.epochs_skipped == 2
-    assert df_rows(canonical(t.read_logical(spark))) == want
-    # orphan crash files are invisible and vacuum removes them
-    removed = t.vacuum()
-    assert any("orphan-crash" in p for p in removed)
-    assert df_rows(canonical(t.read_logical(spark))) == want
+def _unreferenced(t):
+    """Parquet files under the table's data dir that no snapshot on the
+    current lineage references (relative paths, as vacuum() reports)."""
+    live = set()
+    for sid in t.snapshot_ids():
+        with open(t._snap_path(sid)) as f:
+            live |= {x for fl in json.load(f)["files"].values() for x in fl}
+    data = pathlib.Path(t.root, "data")
+    return {str(p.relative_to(t.root)) for p in data.rglob("*.parquet")} - live
 
 
-def test_crash_between_pointer_swap_and_manifest(spark, tmp_path, log, monkeypatch):
-    """A crash after CURRENT swaps but before the manifest fence line is
-    appended must NOT lose the epoch: the offset range stays unfenced, a
-    restart re-applies it, and the idempotent LWW fold converges.  (The
-    reverse write order — fence before pointer — would record the range
-    as committed while readers stay on the parent snapshot, silently
-    dropping the epoch and letting vacuum() delete its files.)"""
+@pytest.mark.parametrize("step", ["_write_snapshot", "_swap_current", "_append_manifest"])
+def test_crash_inside_commit_then_resume(spark, tmp_path, log, monkeypatch, step):
+    """A crash at each step of the real ``_commit`` of epoch 2:
+    ``_write_snapshot`` (data files placed, no snapshot),
+    ``_swap_current`` (snapshot written, pointer not swapped) and
+    ``_append_manifest`` (pointer swapped, range unfenced).  The
+    manifest never fences an epoch readers cannot see, the table stays
+    readable, resume skips exactly the fenced epochs and converges to
+    apply_batch's fold, and vacuum() removes exactly the orphaned data
+    files.  (Fence before pointer would record the range as committed
+    while readers stay on the parent snapshot, silently dropping the
+    epoch and letting vacuum() delete its files.)"""
     want = expected_state(spark, log)
     t = IceletTable.create(str(tmp_path / "t"), n_buckets=8)
     run_replay(spark, t, log, batch_size=600, max_epochs=2)
-    orig = IceletTable._append_manifest
+    state_before = df_rows(canonical(t.read_logical(spark)))
 
-    def boom(self, row):
-        raise RuntimeError("simulated crash before manifest append")
+    def boom(*_a, **_k):
+        raise RuntimeError(f"simulated crash in {step}")
 
-    monkeypatch.setattr(IceletTable, "_append_manifest", boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        run_replay(spark, t, log, batch_size=600)
-    monkeypatch.setattr(IceletTable, "_append_manifest", orig)
-    # pointer moved ahead of the fence: epoch-2 data visible, range unfenced
+    with monkeypatch.context() as mp:
+        mp.setattr(IceletTable, step, boom)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            run_replay(spark, t, log, batch_size=600)
+    swapped = step == "_append_manifest"
+    # epochs 0-1 fenced, and every fenced epoch is on the readers' lineage
     assert len(t.manifest()) == 2
-    assert t.current_snapshot()["epoch"] == 2
-    # restart: epochs 0-1 skip, epoch 2 RE-APPLIES (idempotent), rest apply
+    assert {m["snapshot_id"] for m in t.manifest()} <= set(t.snapshot_ids())
+    # readable mid-crash: the epoch-2 state once the pointer swapped,
+    # else the old snapshot untouched, with epoch 2's files orphaned
+    assert t.current_snapshot()["epoch"] == (2 if swapped else 1)
+    mid = df_rows(canonical(t.read_logical(spark)))
+    assert mid and (swapped or mid == state_before)
+    orphans = _unreferenced(t)
+    assert bool(orphans) != swapped
+    # resume: epochs 0-1 skip, epoch 2 (re-)applies, the rest apply
     r = run_replay(spark, t, log, batch_size=600)
-    assert r.epochs_skipped == 2
-    assert r.epochs_applied >= 1
+    assert r.epochs_skipped == 2 and r.epochs_applied >= 1
     assert df_rows(canonical(t.read_logical(spark))) == want
-    # the re-applied snapshot chains off the crashed one → vacuum keeps both
-    t.vacuum()
+    # the orphans are invisible and vacuum removes exactly them
+    assert set(t.vacuum()) == orphans
     assert df_rows(canonical(t.read_logical(spark))) == want
 
 
@@ -112,27 +117,39 @@ def test_bootstrap_then_incremental(spark, tmp_path):
     assert df_rows(canonical(t.read_logical(spark))) == want
 
 
-def test_mor_vs_cow_equality_and_compaction(spark, tmp_path, log):
-    """Merge-on-read and copy-on-write converge to identical logical state;
-    compaction preserves it while folding delta files."""
+def test_mor_equals_mor_after_full_compaction(spark, tmp_path, log):
+    """A full compaction folds the accumulated delta files to one file
+    per bucket, marks the snapshot ``delta_free`` and keeps the logical
+    state; a replay after it is still fenced."""
     want = expected_state(spark, log)
-    mor = IceletTable.create(str(tmp_path / "mor"), n_buckets=4, mode="mor")
-    cow = IceletTable.create(str(tmp_path / "cow"), n_buckets=4, mode="cow")
+    mor = IceletTable.create(str(tmp_path / "mor"), n_buckets=4)
     run_replay(spark, mor, log, batch_size=500)
-    run_replay(spark, cow, log, batch_size=500)
     assert df_rows(canonical(mor.read_logical(spark))) == want
-    assert df_rows(canonical(cow.read_logical(spark))) == want
-    # mor accumulated delta files; compaction folds them to 1/bucket
     files_before = sum(len(v) for v in mor.current_snapshot()["files"].values())
     assert files_before > 4
     res = mor.compact(spark, min_files=2)
     assert res is not None and res.n_rows > 0
-    files_after = sum(len(v) for v in mor.current_snapshot()["files"].values())
-    assert files_after == 4
+    snap = mor.current_snapshot()
+    assert snap["delta_free"] is True
+    assert sorted(len(v) for v in snap["files"].values()) == [1, 1, 1, 1]
     assert df_rows(canonical(mor.read_logical(spark))) == want
-    # replay after compaction still fenced
     r = run_replay(spark, mor, log, batch_size=500)
     assert r.epochs_applied == 0
+
+
+def test_load_refuses_cow_table(tmp_path):
+    """Copy-on-write is gone: loading a table whose snapshot says
+    ``mode: cow`` fails, naming the mode."""
+    t = IceletTable.create(str(tmp_path / "t"), n_buckets=4)
+    assert t.current_snapshot()["mode"] == "mor"
+    assert IceletTable.load(t.root).n_buckets == 4
+    path = t._snap_path(t.current_snapshot_id())
+    with open(path) as f:
+        snap = json.load(f)
+    with open(path, "w") as f:
+        json.dump(dict(snap, mode="cow"), f)
+    with pytest.raises(ValueError, match="'cow'"):
+        IceletTable.load(t.root)
 
 
 def test_snapshot_time_travel(spark, tmp_path, log):
@@ -255,25 +272,22 @@ def test_mor_epoch_writes_one_file_per_touched_bucket(spark, tmp_path, log):
 
 def test_manifest_n_files_is_snapshot_minus_parent(spark, tmp_path, log):
     """Every commit's manifest row records the data files it added —
-    bootstrap, MoR appends, compaction, COW appends and an empty epoch —
-    and replay_metrics reports files written per append."""
-    mor = IceletTable.create(str(tmp_path / "mor"), n_buckets=4)
-    mor.bootstrap(gen_transcripts(spark, n_conv=8, max_turns=6, seed=3))
-    run_replay(spark, mor, log, batch_size=600)
-    mor.compact(spark, min_files=2)
-    mor.apply_epoch(spark, spark.createDataFrame([], CHANGE_SCHEMA), 99, 10**9, 10**9 + 1)
-    cow = IceletTable.create(str(tmp_path / "cow"), n_buckets=4, mode="cow")
-    run_replay(spark, cow, log, batch_size=600)
-    for t in (mor, cow):
-        rows = t.manifest()
-        assert all("n_files" in m for m in rows)
-        sids = [m["snapshot_id"] for m in rows]
-        for i, m in enumerate(rows):
-            # an empty epoch re-fences the current snapshot: no new files
-            new_snap = sids.index(m["snapshot_id"]) == i
-            want = sum(map(len, _added_files(t, m["snapshot_id"]).values())) if new_snap else 0
-            assert m["n_files"] == want, m
-        appends = [m["n_files"] for m in rows if m["kind"] == "append"]
-        met = replay_metrics(t)
-        assert met["files_per_append"] == round(sum(appends) / len(appends), 2)
-        assert met["files_per_append_max"] == max(appends) > 0
+    bootstrap, appends, compaction and an empty epoch — and
+    replay_metrics reports files written per append."""
+    t = IceletTable.create(str(tmp_path / "mor"), n_buckets=4)
+    t.bootstrap(gen_transcripts(spark, n_conv=8, max_turns=6, seed=3))
+    run_replay(spark, t, log, batch_size=600)
+    t.compact(spark, min_files=2)
+    t.apply_epoch(spark, spark.createDataFrame([], CHANGE_SCHEMA), 99, 10**9, 10**9 + 1)
+    rows = t.manifest()
+    assert all("n_files" in m for m in rows)
+    sids = [m["snapshot_id"] for m in rows]
+    for i, m in enumerate(rows):
+        # an empty epoch re-fences the current snapshot: no new files
+        new_snap = sids.index(m["snapshot_id"]) == i
+        want = sum(map(len, _added_files(t, m["snapshot_id"]).values())) if new_snap else 0
+        assert m["n_files"] == want, m
+    appends = [m["n_files"] for m in rows if m["kind"] == "append"]
+    met = replay_metrics(t)
+    assert met["files_per_append"] == round(sum(appends) / len(appends), 2)
+    assert met["files_per_append_max"] == max(appends) > 0
